@@ -37,7 +37,9 @@ _FMIX_C2 = np.uint64(0xC4CEB9FE1A85EC53)
 
 
 def fmix64(h: np.ndarray) -> np.ndarray:
-    """splitmix-style finalizer (same constants as the dedup kernel)."""
+    """splitmix-style finalizer: the packed token ints are injective but
+    low-entropy in the high bits, so mix before masking. Shared with the
+    MinHash band kernel (operators.dedup)."""
     h = h ^ (h >> np.uint64(33))
     h = h * _FMIX_C1
     h = h ^ (h >> np.uint64(33))

@@ -259,7 +259,8 @@ def cover_bboxes_batch(
     north: np.ndarray,
     level: int = COVER_LEVEL,
 ) -> list[np.ndarray]:
-    """Batched G2 for the pandas-UDF path: one cover array per input bbox."""
+    """Batched G2: one cover array per input bbox (empty for a bbox with
+    a non-finite edge)."""
     out: list[np.ndarray] = []
     for w, s, e, n in zip(west, south, east, north):
         if not (

@@ -20,7 +20,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import ArrayType, DoubleType, LongType
+from pyspark.sql.types import DoubleType, LongType
+
+from ..functions.tokens import fmix64, string_buffers
 
 NUM_PERM = 32
 NUM_BANDS = 8  # 4 rows per band
@@ -99,42 +101,6 @@ def _gram_hash_arrays(texts: pd.Series) -> tuple[np.ndarray, np.ndarray]:
     return gram_row[order], gram_hash[order]
 
 
-def _gram_hashes(text: str) -> np.ndarray:
-    """Scalar twin of ``_gram_hash_arrays`` (tests + tiny inputs)."""
-    _, h = _gram_hash_arrays(pd.Series([text]))
-    return h
-
-
-def _minhash_batch(texts: pd.Series) -> pd.Series:
-    """(a*x + b) mod p per permutation over the whole batch's gram array
-    (a < 2^32, x < 2^31: the product provably fits uint64 — see the
-    _PERM_A comment), then ``np.minimum.reduceat`` per document — 32
-    vector passes total, no per-document Python. Empty docs -> all-zero
-    signature, null docs -> null (same surface as the scalar kernel)."""
-    t = texts.reset_index(drop=True)
-    rows = len(t)
-    gram_row, gram_hash = _gram_hash_arrays(t)
-    sig = np.zeros((rows, NUM_PERM), dtype=np.int64)
-    if len(gram_row):
-        with_grams = np.unique(gram_row)
-        starts = np.searchsorted(gram_row, with_grams)
-        x = (gram_hash & _X_MASK).astype(np.uint64)
-        for p in range(NUM_PERM):
-            v = (
-                x * np.uint64(_PERM_A[p]) + np.uint64(_PERM_B[p])
-            ) % np.uint64(_MERSENNE)
-            sig[with_grams, p] = np.minimum.reduceat(v, starts).astype(np.int64)
-    isnull = t.isna().to_numpy()
-    out = pd.Series(list(sig), dtype=object)
-    out[isnull] = None
-    return out
-
-
-@pandas_udf(ArrayType(LongType()))
-def minhash_udf(text: pd.Series) -> pd.Series:
-    return _minhash_batch(text)
-
-
 # --- Arrow-native signature kernel (round 7, VERDICT r6 next-#2) -------------
 #
 # The pandas kernel above pays for Python-object traffic four times per
@@ -157,7 +123,7 @@ def minhash_udf(text: pd.Series) -> pd.Series:
 # words > 8 B, first 64 B] * B + byte_length) — injective for words
 # <= 8 bytes, prefix+length beyond 64 bytes (natural-text safe). Gram
 # hashes are the same degree-(k-1) polynomial as the pandas kernel.
-# Signature VALUES therefore differ from minhash_udf's — the LSH
+# Signature VALUES therefore differ from a pandas-gram MinHash — the LSH
 # contract (identical docs -> identical signatures; banding S-curve on
 # the same universal family) is unchanged, the verify stage filters on
 # exact gram Jaccard either way, and the gate oracle recomputes string
@@ -169,19 +135,6 @@ _LOWER_LUT[65:91] += 32
 _WS_LUT = np.zeros(256, dtype=bool)
 _WS_LUT[[9, 10, 11, 12, 13, 32]] = True
 _WORD_CAP = 64
-_FMIX_C1 = np.uint64(0xFF51AFD7ED558CCD)
-_FMIX_C2 = np.uint64(0xC4CEB9FE1A85EC53)
-
-
-def _fmix64(h: np.ndarray) -> np.ndarray:
-    """splitmix-style finalizer: the packed word ints are injective but
-    low-entropy in the high bits; the perm family masks to the LOW 31
-    bits, so mix before it looks."""
-    h = h ^ (h >> np.uint64(33))
-    h = h * _FMIX_C1
-    h = h ^ (h >> np.uint64(33))
-    h = h * _FMIX_C2
-    return h ^ (h >> np.uint64(33))
 
 
 def _word_gram_hashes_arrow(
@@ -246,7 +199,7 @@ def _word_gram_hashes_arrow(
             ].astype(np.uint64)
             j += 1
         h[long_idx] = h[long_idx] * _POLY_B + tail
-    h = _fmix64(h * _POLY_B + wl.astype(np.uint64))
+    h = fmix64(h * _POLY_B + wl.astype(np.uint64))
     # doc attribution + per-doc word counts
     wdoc = np.searchsorted(offsets[1:], starts + lo, side="right").astype(
         np.int64
@@ -283,23 +236,6 @@ def _word_gram_hashes_arrow(
     return gram_row, gram_hash
 
 
-def _string_buffers(col) -> "tuple[np.ndarray, np.ndarray]":
-    """(absolute int64 offsets, uint8 data) views of an Arrow string
-    array — zero-copy, slice-offset aware."""
-    import pyarrow as pa
-
-    if pa.types.is_large_string(col.type):
-        odt = np.int64
-    else:
-        odt = np.int32
-    _, obuf, dbuf = col.buffers()
-    offs = np.frombuffer(obuf, dtype=odt)[
-        col.offset : col.offset + len(col) + 1
-    ].astype(np.int64)
-    data = np.frombuffer(dbuf, dtype=np.uint8)
-    return offs, data
-
-
 def _band_hashes_from_sigs(sig: np.ndarray) -> np.ndarray:
     """(m, NUM_BANDS) int64 bucket keys: fmix64 of the band's
     rows-per-band signature slots as a polynomial — the numpy stand-in
@@ -313,7 +249,7 @@ def _band_hashes_from_sigs(sig: np.ndarray) -> np.ndarray:
         acc = np.zeros(m, dtype=np.uint64)
         for r in range(rows_per_band):
             acc = acc * _POLY_B + u[:, b * rows_per_band + r]
-        out[:, b] = _fmix64(acc).view(np.int64)
+        out[:, b] = fmix64(acc).view(np.int64)
     return out
 
 
@@ -322,7 +258,7 @@ def _band_rows_arrow(ids, texts, id_name: str):
     (id repeated per band, band, bh) for every doc with >= 1 gram."""
     import pyarrow as pa
 
-    offs, data = _string_buffers(texts)
+    offs, data = string_buffers(texts)
     gram_row, gram_hash = _word_gram_hashes_arrow(offs, data)
     if not len(gram_row):
         return None
@@ -613,13 +549,37 @@ BAND_KERNEL_VERSION = 2
 
 def _store_kernel_version(spark, path: str) -> "int | None":
     """Version recorded in a band store's ``_kernel_version`` sidecar
-    (underscore-prefixed: invisible to the data reads), or None for a
-    store that predates markers / does not exist yet."""
+    (underscore-prefixed: invisible to the data reads), or None when no
+    store exists at ``path`` yet.
+
+    A path that holds band data but no marker predates markers: its era
+    is unknown, so it raises instead of reading as "no store" (which
+    would let the writer append current-kernel bands and stamp the mixed
+    store as current). Only a missing marker path is caught; any other
+    read error propagates."""
+    from pyspark.errors import AnalysisException
+
     try:
         row = spark.read.parquet(f"{path}/_kernel_version").first()
-    except Exception:
-        return None
-    return None if row is None else int(row["kernel_version"])
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        row = None
+    if row is not None:
+        return int(row["kernel_version"])
+    # Hadoop FileSystem, not os.path, so hdfs:// / s3a:// stores count
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if fs.exists(hpath) and any(
+        not st.getPath().getName().startswith((".", "_"))
+        for st in fs.listStatus(hpath)
+    ):
+        raise ValueError(
+            f"minhash store {path} holds band data but no _kernel_version "
+            "marker (written before markers, signature-kernel era unknown); "
+            "rebuild the store with update_minhash_store"
+        )
+    return None
 
 
 def update_minhash_store(

@@ -3,7 +3,7 @@
 Re-expresses the reference harvester's per-record XML field extraction
 ([REF? harvest_hnap.py] — XPath + dict assembly, one record at a time) as
 Arrow-batched columnar stages. The kernels live in functions.text so the
-pytest oracle and the UDF path share one implementation (byte-identity
+pytest oracle and the Spark stages share one implementation (byte-identity
 invariant, BASELINE.json:15).
 """
 
@@ -13,100 +13,20 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import IntegerType, LongType, StringType
 
 from ..functions import text as _text
 from ..schemas import PAYLOADS_TYPE
-
-# --- E1: text extraction ----------------------------------------------------
-
-
-@pandas_udf(StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    """html binary -> canonical text; Series.map over the Arrow batch.
-
-    The per-element work is the stdlib HTML parser (no vectorized parser
-    exists in-sandbox); batching still amortizes the JVM<->Python transfer,
-    which is the expensive part at scale.
-    """
-    # per-row-ok: stdlib HTMLParser is stateful per document; no
-    # vectorized HTML parser exists in-sandbox
-    return html.map(lambda b: _text.extract_text(bytes(b)) if b is not None else None)
-
 
 # --- E2: geo-payload miner ---------------------------------------------------
 
 
 @pandas_udf(PAYLOADS_TYPE)
 def mine_payloads_udf(text: pd.Series) -> pd.Series:
-    # per-row-ok: scalar map measured FASTER than the extractall batch
-    # kernel here (0.54s vs 0.60s / 20k rows; MultiIndex assembly cost) —
-    # mine_payloads_batch remains as the property-tested alternative.
+    # per-row-ok: the scalar reference miner, kept for the streaming
+    # path's per-row payload arrays; the batch pipeline mines with the
+    # flat kernel (functions.text.mine_payloads_flat) inside its fused
+    # stage instead
     return text.map(_text.mine_payloads)
-
-
-from pyspark.sql.types import StructField, StructType
-
-_EXTRACT_MINE_TYPE = StructType(
-    [
-        StructField("extracted_text", StringType(), True),
-        StructField("payloads", PAYLOADS_TYPE, True),
-    ]
-)
-
-
-@pandas_udf(_EXTRACT_MINE_TYPE)
-def extract_mine_udf(text: pd.Series, html: pd.Series) -> pd.DataFrame:
-    """Fused E1+E2: one Python stage instead of two.
-
-    Every chained ArrowEvalPython node costs a separate Python worker per
-    task (creation serialized JVM-side), so fusing consecutive Python
-    stages halves worker count and removes one Arrow round trip — this
-    measurably dominates pipeline scaling at high parallelism. Uses the
-    materialized text when present; extracts from html only when missing
-    (byte-identical path, same extract_text kernel).
-    """
-    et = [
-        t if t is not None else (_text.extract_text(bytes(h)) if h is not None else None)
-        for t, h in zip(text, html)
-    ]
-    return pd.DataFrame(
-        {"extracted_text": et, "payloads": [_text.mine_payloads(t) for t in et]}
-    )
-
-
-def with_extracted_payloads(df: DataFrame) -> DataFrame:
-    """P5 prefilter -> fused E1+E2 -> posexplode (the pipeline hot path).
-
-    The rlike prefilter applies to rows that already carry text; rows with
-    only html pass through to the extraction side of the fused kernel.
-    """
-    # substring contains() is ~10x cheaper than Java-regex rlike on the
-    # full corpus and is a strict SUPERSET of minable rows (a coord pair
-    # needs a comma; a bbox phrase contains "west:" — lower() because
-    # BBOX_RE is case-insensitive, so "WEST:" must pass too; the OR
-    # short-circuits, so lower() only runs on comma-free rows) — false
-    # positives just yield empty payload arrays that posexplode drops
-    prefilter = (
-        F.col("text").isNull()
-        | F.col("text").contains(",")
-        | F.lower(F.col("text")).contains("west:")
-    )
-    # null html JVM-side when text is present so the (large) html bytes
-    # never cross the Arrow boundary for already-extracted pages
-    html_in = F.when(F.col("text").isNull(), F.col("html"))
-    em = df.filter(prefilter).withColumn(
-        "_em", extract_mine_udf(F.col("text"), html_in)
-    )
-    return (
-        em.withColumn("extracted_text", F.col("_em.extracted_text"))
-        .select(
-            "*",
-            F.posexplode(F.col("_em.payloads")).alias("payload_idx", "payload"),
-        )
-        .select("*", "payload.*")
-        .drop("payload", "_em")
-    )
 
 
 # Java-regex twins of the Python miner patterns (functions.text). Java
@@ -209,18 +129,12 @@ def with_payloads(df: DataFrame, text_col: str = "text") -> DataFrame:
 # --- E3: bilingual normalization ---------------------------------------------
 
 
-@pandas_udf(StringType())
-def nfc_udf(s: pd.Series) -> pd.Series:
-    """Unicode NFC via the vectorized pandas string path."""
-    return s.str.normalize("NFC")
-
-
 def with_bilingual(df: DataFrame, col: str, out_prefix: str) -> DataFrame:
     """Pair en/fr field values into *_en / *_fr columns keyed off lang.
 
     Replaces the HNAP PT_FreeText pairing ([REF? harvest_hnap.py]):
-    fully native when/coalesce — the NFC pass is the only UDF and is
-    applied once upstream by the pipeline.
+    fully native when/coalesce. Values are expected NFC-normalized
+    already (functions.text.extract_text applies NFC).
     """
     is_fr = F.col("lang") == F.lit("fr")
     return df.withColumn(

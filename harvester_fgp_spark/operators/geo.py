@@ -4,10 +4,10 @@ Division of labor, chosen for scale:
 - NATIVE Spark expressions (whole-stage codegen, no Python): cell encode
   (G1 — Morton interleave via the magic-number spread, pure shift/mask
   ops), tile assign (G7 point path), cell parent (G3), haversine (G6).
-- Arrow-batched pandas UDFs wrapping the numpy kernels: bbox cover (G2,
-  variable fan-out), exact PIP (G4 — broadcast PolygonIndex, deserialized
-  once per worker, not once per batch). A numpy G1 twin exists for
-  kernel-level tests and as the oracle for the native expression.
+- Arrow-batched Python over the numpy kernels: exact PIP (G4 — broadcast
+  PolygonIndex, deserialized once per worker, not once per batch). The
+  numpy G1 kernel (geo.cells.encode) is the test oracle for the native
+  expression.
 
 The PIP join is two-phase (SURVEY §2.5 J1 + §2.4 G4): a coarse broadcast
 equi-join on COVER_LEVEL cell prefixes prunes the candidate space JVM-side,
@@ -25,7 +25,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import ArrayType
 from pyspark.sql.window import Window
 
 from ..geo import cells as _cells
@@ -78,21 +78,6 @@ def cell_encode_col(
     return _spread_bits_col(x).bitwiseOR(F.shiftleft(_spread_bits_col(y), 1))
 
 
-def cell_encode_udf(level: int = _cells.DEFAULT_LEVEL):
-    @pandas_udf(LongType())
-    def _encode(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        out = _cells.encode(
-            lon.to_numpy(dtype=np.float64, na_value=np.nan),
-            lat.to_numpy(dtype=np.float64, na_value=np.nan),
-            level,
-        )
-        res = pd.Series(out)
-        res[lon.isna() | lat.isna()] = None
-        return res
-
-    return _encode
-
-
 def with_cell(
     df: DataFrame,
     lon_col: str = "lon",
@@ -101,26 +86,6 @@ def with_cell(
     out: str = "cell_id",
 ) -> DataFrame:
     return df.withColumn(out, cell_encode_col(F.col(lon_col), F.col(lat_col), level))
-
-
-# --- G2: bbox -> cover ----------------------------------------------------------
-
-
-def cover_udf(level: int = _cells.COVER_LEVEL):
-    @pandas_udf(ArrayType(LongType()))
-    def _cover(
-        west: pd.Series, south: pd.Series, east: pd.Series, north: pd.Series
-    ) -> pd.Series:
-        covers = _cells.cover_bboxes_batch(
-            west.to_numpy(dtype=np.float64, na_value=np.nan),
-            south.to_numpy(dtype=np.float64, na_value=np.nan),
-            east.to_numpy(dtype=np.float64, na_value=np.nan),
-            north.to_numpy(dtype=np.float64, na_value=np.nan),
-            level,
-        )
-        return pd.Series([c.tolist() for c in covers])
-
-    return _cover
 
 
 # --- G3: cell parent (NATIVE — stays in codegen) --------------------------------
@@ -233,6 +198,30 @@ def build_polygon_index(polygons_pdf: pd.DataFrame) -> _pip.PolygonIndex:
     return _pip.PolygonIndex(polygons_pdf["polygon_id"].tolist(), rings)
 
 
+def pip_match_frame(
+    index: _pip.PolygonIndex,
+    pdf: pd.DataFrame,
+    lon: np.ndarray,
+    lat: np.ndarray,
+    keep_unmatched: bool = True,
+) -> pd.DataFrame:
+    """Exact PIP of one batch as a join: one row of ``pdf`` per (point,
+    polygon) match with its ``polygon_id``; with ``keep_unmatched`` the
+    points matching no polygon follow with a null ``polygon_id`` (left
+    join). ``lon``/``lat`` hold one point per ``pdf`` row. Shared by
+    ``pip_join`` and the pipeline's fused mine+PIP stage."""
+    pts_i, polys_i = index.match_points(lon, lat)
+    matched = pdf.iloc[pts_i].copy()
+    matched["polygon_id"] = np.array(index.polygon_ids, dtype=object)[polys_i]
+    if not keep_unmatched:
+        return matched
+    unmatched_mask = np.ones(len(pdf), dtype=bool)
+    unmatched_mask[np.unique(pts_i)] = False
+    rest = pdf.iloc[np.nonzero(unmatched_mask)[0]].copy()
+    rest["polygon_id"] = None
+    return pd.concat([matched, rest], ignore_index=True)
+
+
 def pip_join(
     spark: SparkSession,
     points: DataFrame,
@@ -257,7 +246,6 @@ def pip_join(
     out_schema = StructType(
         list(points.schema.fields) + [StructField("polygon_id", StringType(), True)]
     )
-    cols = [f.name for f in points.schema.fields]
     keep_unmatched = how == "left"
 
     def _match(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -265,16 +253,7 @@ def pip_join(
         for pdf in batches:
             lon = pdf[lon_col].to_numpy(dtype=np.float64, na_value=np.nan)
             lat = pdf[lat_col].to_numpy(dtype=np.float64, na_value=np.nan)
-            pts_i, polys_i = index.match_points(lon, lat)
-            matched = pdf.iloc[pts_i][cols].copy()
-            matched["polygon_id"] = np.array(index.polygon_ids, dtype=object)[polys_i]
-            if keep_unmatched:
-                unmatched_mask = np.ones(len(pdf), dtype=bool)
-                unmatched_mask[np.unique(pts_i)] = False
-                rest = pdf.iloc[np.nonzero(unmatched_mask)[0]][cols].copy()
-                rest["polygon_id"] = None
-                matched = pd.concat([matched, rest], ignore_index=True)
-            yield matched
+            yield pip_match_frame(index, pdf, lon, lat, keep_unmatched)
 
     return points.mapInPandas(_match, out_schema)
 
@@ -1122,7 +1101,7 @@ def simplify_rings(
     rebuilt natively by ``filter(arrays_zip(...))`` — the Python
     boundary carries only doubles in / booleans out, never structs.
     Per-row kernel cost is O(n log n) on vertex count; batches amortize
-    Arrow transfer exactly like the G2 cover UDF.
+    Arrow transfer.
     """
     from pyspark.sql.types import BooleanType
 

@@ -100,7 +100,12 @@ def cosine_topk(
     q_id_t = queries.schema[q_id].dataType.simpleString()
     c_id_t = candidates.schema[c_id].dataType.simpleString()
     blocks = spark.range(n_blocks).select(F.col("id").cast("int").alias("_blk"))
-    qrep = queries.select(q_id, q_emb).crossJoin(F.broadcast(blocks))
+    # a null-id query has no self to exclude and no id to rank under
+    qrep = (
+        queries.filter(F.col(q_id).isNotNull())
+        .select(q_id, q_emb)
+        .crossJoin(F.broadcast(blocks))
+    )
     cblk = candidates.select(c_id, c_emb).withColumn(
         "_blk", F.pmod(F.xxhash64(F.col(c_id)), F.lit(n_blocks)).cast("int")
     )

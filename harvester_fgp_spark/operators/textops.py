@@ -22,16 +22,6 @@ from pyspark.sql.types import (
 from ..functions import text as _text
 
 
-@pandas_udf(StringType())
-def detect_lang_udf(text: pd.Series) -> pd.Series:
-    return _text.detect_lang_batch(text)
-
-
-@pandas_udf(DoubleType())
-def quality_udf(text: pd.Series) -> pd.Series:
-    return _text.quality_score_batch(text)
-
-
 _LANG_QUALITY_TYPE = StructType(
     [
         StructField("detected_lang", StringType(), True),
@@ -52,8 +42,7 @@ def lang_quality_udf(text: pd.Series) -> pd.DataFrame:
     """
     # per-row-ok: measured — Python-set stopword membership is C-speed
     # dict probing; every batch reconstruction tried (np.isin on object
-    # and on siphashed uint64 arrays) lost to it. See functions.text
-    # batch kernels for the property-tested alternatives + numbers.
+    # and on siphashed uint64 arrays) lost to it (numbers above).
     pairs = text.map(_text.lang_quality)
     return pd.DataFrame(
         {

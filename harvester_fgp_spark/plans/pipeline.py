@@ -1,14 +1,15 @@
 """EP1: the full production DAG (SURVEY.md §3.2, §7.2 minimum slice).
 
 pages -> validity/lang/coord prefilters (native, BEFORE any UDF so
-pushdown reaches the scan) -> E1 extract -> E2 mine+explode -> E3
-bilingual -> E6/E7 serialization -> G1 cell encode (native) -> G4
-broadcast-R-tree PIP -> G7 tile assign (native) -> normalized records.
+pushdown reaches the scan) -> E1 extract -> E2 mine+explode -> G4
+broadcast-R-tree PIP -> E3 bilingual -> E6/E7 serialization -> G1 cell
+encode (native) -> G7 tile assign (native) -> normalized records.
 
 The reference runs the same semantics as one sequential per-record loop
 ([REF? harvest_hnap.py], SURVEY §3.1); here the whole thing is one
 declarative DataFrame DAG — Catalyst owns ordering, AQE owns shuffle
-sizing, and the only Python is three Arrow-batched stages (E1, E2, G4).
+sizing, and the only Python is one fused Arrow-batched stage (E1 + E2 +
+G4).
 """
 
 from __future__ import annotations
@@ -103,19 +104,9 @@ def _fused_mine_match(bidx, keep_text: bool = True):
                 pt_lat=pt_lat,
                 pt_lon=pt_lon,
             )
-            out = pd.DataFrame(data)
-            pts_i, polys_i = index.match_points(pt_lon, pt_lat)
-            # left-join semantics identical to operators.geo.pip_join:
-            # one row per (payload, polygon) match; unmatched keep None
-            matched = out.iloc[pts_i].copy()
-            matched["polygon_id"] = np.array(index.polygon_ids, dtype=object)[
-                polys_i
-            ]
-            unmatched_mask = np.ones(len(out), dtype=bool)
-            unmatched_mask[np.unique(pts_i)] = False
-            rest = out.iloc[np.nonzero(unmatched_mask)[0]].copy()
-            rest["polygon_id"] = None
-            yield pd.concat([matched, rest], ignore_index=True)
+            # left join: one row per (payload, polygon) match; unmatched
+            # payloads keep a null polygon_id
+            yield G.pip_match_frame(index, pd.DataFrame(data), pt_lon, pt_lat)
 
     return fn
 
@@ -126,61 +117,33 @@ def mine_records(
     polygons_pdf: pd.DataFrame,
     cell_level: int = _cells.DEFAULT_LEVEL,
     tile_z: int = _tiles.DEFAULT_TILE_Z,
-    verify_extraction: bool = False,
     keep_text: bool = True,
     engine: str = "fused",
 ) -> DataFrame:
     """pages + polygons -> normalized records (FIXTURES.md §3 core fields).
 
-    `verify_extraction=True` adds the E1 output column (`extracted_text`)
-    for byte-identity checks; production leaves it off so the html column
-    is pruned from the scan when text is already materialized.
+    `engine` selects the payload+PIP stage; both are record-identical
+    (asserted in tests/test_native_pipeline.py):
+      - "fused" (the product path): ONE mapInPandas stage (extract ->
+        mine -> explode -> R-tree PIP). Rows without text are extracted
+        from html inside the stage.
+      - "native": the oracle twin, used by the __spark_entry__ flagship
+        oracles and by perfbench as the reference output. Rows that
+        carry text run a ZERO-Python plan — the regex miner as codegen
+        expressions (payloads_native_col) and exact PIP as a broadcast
+        join + higher-order ray cast (pip_join_native); html-only rows
+        still route through the fused Python stage and union back in.
 
-    `engine` selects the payload+PIP stage (round 3; output is
-    record-identical, asserted in tests/test_native_pipeline.py):
-      - "fused": ONE mapInPandas stage (extract -> mine -> explode ->
-        R-tree PIP). The only choice for html-only corpora.
-      - "native": rows that carry text run a ZERO-Python plan — the
-        regex miner as codegen expressions (payloads_native_col) and
-        exact PIP as a broadcast join + higher-order ray cast
-        (pip_join_native); html-only rows still route through the fused
-        Python stage and union back in.
-
-    Measured (2M pages, local[32], this host): steady-state fused wins
-    (1.9-2.4 s vs native 2.6-3.0 s — warm Python workers + the numpy
-    flat miner beat Java running two regexp_extract_all passes plus the
-    union overhead), but COLD-start native wins (5.3 s vs 8.3 s — no
-    worker-spawn storm). Default stays "fused" for long-running batch;
-    "native" is the better shape for short jobs / micro-batches and for
-    clusters where Python workers contend with executors for memory.
+    Round-3 history (2M pages, local[32], a 32-core host): steady-state
+    fused won (1.9-2.4 s vs native 2.6-3.0 s — warm Python workers + the
+    numpy flat miner beat Java running two regexp_extract_all passes plus
+    the union overhead), but cold-start native won (5.3 s vs 8.3 s — no
+    worker-spawn storm).
     """
     valid, _quarantine = E.split_valid(pages)
     df = valid.filter(F.col("lang").isin("en", "fr"))
 
-    if verify_extraction:
-        # byte-identity branch: force extraction from html for every row,
-        # then the modular (unfused) stages
-        df = df.withColumn("extracted_text", E.extract_text_udf("html"))
-        df = E.with_payloads(df, "extracted_text")
-        df = df.withColumn(
-            "pt_lat",
-            F.when(F.col("kind") == "point", F.col("lat")).otherwise(
-                (F.col("south") + F.col("north")) / 2
-            ),
-        ).withColumn(
-            "pt_lon",
-            F.when(F.col("kind") == "point", F.col("lon")).otherwise(
-                G.bbox_center_lon_col(F.col("west"), F.col("east"))
-            ),
-        )
-        df = df.select(
-            "url", "warc_ts", "lang", "extracted_text", "payload_idx",
-            "kind", "lat", "lon", "west", "south", "east", "north",
-            "pt_lat", "pt_lon",
-        )
-        df = G.pip_join(spark, df, polygons_pdf, lon_col="pt_lon",
-                        lat_col="pt_lat", how="left")
-    elif engine == "native":
+    if engine == "native":
         # round-3 zero-Python plan for text-bearing rows: native regex
         # miner (codegen) + broadcast higher-order PIP; html-only rows
         # fall back to the fused Python stage and union in
@@ -298,15 +261,8 @@ def mine_records(
         )
     # E5: temporal normalization (crawl_date) in both branches — native
     df = E.with_temporal(df)
-    df = df.withColumn(
-        "cell_id", G.cell_encode_col(F.col("pt_lon"), F.col("pt_lat"), cell_level)
-    )
-    tx, ty = G.tile_cols(F.col("pt_lon"), F.col("pt_lat"), tile_z)
-    df = (
-        df.withColumn("tile_z", F.lit(tile_z).cast("int"))
-        .withColumn("tile_x", tx)
-        .withColumn("tile_y", ty)
-    )
+    df = G.with_cell(df, "pt_lon", "pt_lat", cell_level)
+    df = G.with_tile(df, "pt_lon", "pt_lat", tile_z)
     # payload ordinal comes from the miner's array position — stable,
     # deterministic, and no window shuffle (E7)
     df = df.withColumn("record_id", E.record_id_col(F.col("url"), F.col("payload_idx")))

@@ -54,15 +54,6 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
                    help="Structured Streaming checkpoint location "
                    "(default: <checkpoint>/_stream)")
     p.add_argument(
-        "--engine",
-        choices=("fused", "native"),
-        default="fused",
-        help="payload+PIP stage: 'fused' = one mapInPandas Python stage "
-        "(fastest steady state); 'native' = zero-Python plan for "
-        "text-bearing rows (fastest cold start / micro-batches) — "
-        "record-identical outputs either way",
-    )
-    p.add_argument(
         "--compact", type=int, default=None, metavar="ROWS_PER_FILE",
         help="after writing, rewrite the output compacted: per-tile file "
         "budget = ceil(rows / ROWS_PER_FILE), rows clustered by cell_id "
@@ -155,7 +146,7 @@ def main(argv: list[str]) -> None:
     records = C.with_tile_id(
         mine_records(
             spark, pages, ppdf, cell_level=args.cell_level,
-            tile_z=args.tile_z, engine=args.engine,
+            tile_z=args.tile_z,
         )
     )
     if args.resume:

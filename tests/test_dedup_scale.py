@@ -296,3 +296,33 @@ def test_minhash_incremental_store_identity(spark, tmp_path):
     # jaccard values match the one-shot run exactly
     merged = incr.merge(oneshot, on=["id_a", "id_b"], suffixes=("_i", "_o"))
     assert (merged.jaccard_i == merged.jaccard_o).all()
+
+
+def test_minhash_store_without_marker_is_refused(spark, tmp_path):
+    """Band data with no ``_kernel_version`` marker comes from an unknown
+    signature-kernel era: appending to it must raise, not read as "no
+    store" (which appended current bands and stamped the mixed store as
+    current). A path with no store at all still starts a fresh one."""
+    import os
+
+    import pytest
+
+    from harvester_fgp_spark.operators.dedup import (
+        minhash_incremental_pairs,
+        update_minhash_store,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"w{i} " * 20) for i in range(10)], "doc_id long, text string"
+    )
+    store = str(tmp_path / "bands")
+    band_table(docs).write.partitionBy("band").parquet(store)
+    with pytest.raises(ValueError, match="no _kernel_version marker"):
+        update_minhash_store(docs, store)
+    assert not os.path.exists(f"{store}/_kernel_version")
+    with pytest.raises(ValueError, match="no _kernel_version marker"):
+        minhash_incremental_pairs(docs, store, docs)
+
+    fresh = str(tmp_path / "fresh")
+    update_minhash_store(docs, fresh)
+    assert os.path.exists(f"{fresh}/_kernel_version")

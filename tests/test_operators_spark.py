@@ -87,18 +87,39 @@ def test_native_haversine_matches_numpy(spark):
 
 
 def test_extract_byte_identity_through_spark(spark):
-    """BASELINE.json:15 — byte-identical extracted text per url (E1)."""
-    from harvester_fgp_spark.functions.text import extract_text
+    """BASELINE.json:15 — byte-identical extracted text per url (E1),
+    through the product path: mine_records(keep_text=True) on the pages
+    as given, and again with every text nulled so each row takes the
+    fused stage's html fallback. Both runs must emit the same records,
+    every extracted_text must be extract_text(html) byte for byte, and
+    the emitted urls must be exactly the en/fr pages that mine >= 1
+    payload from their extracted html."""
+    from harvester_fgp_spark.functions.text import extract_text, mine_payloads
+    from harvester_fgp_spark.plans.pipeline import mine_records
 
-    pages = pages_df(spark, 500, seed=42)
-    got = (
-        pages.select("url", E.extract_text_udf("html").alias("et"))
-        .toPandas()
-        .set_index("url")["et"]
-    )
-    pdf = generate_pages(500, seed=42)
-    for url, html in zip(pdf["url"], pdf["html"]):
-        assert got[url].encode("utf-8") == extract_text(html).encode("utf-8")
+    pages = pages_df(spark, 1200, seed=42)
+    html_only = pages.withColumn("text", F.lit(None).cast("string"))
+    polys = generate_polygons(60, seed=42)
+    runs = [
+        mine_records(spark, df, polys, keep_text=True).collect()
+        for df in (pages, html_only)
+    ]
+    assert sorted(map(tuple, runs[0])) == sorted(map(tuple, runs[1]))
+
+    pdf = generate_pages(1200, seed=42)
+    want = {u: extract_text(h) for u, h in zip(pdf["url"], pdf["html"])}
+    for rows in runs:
+        for r in rows:
+            assert r.extracted_text.encode("utf-8") == want[r.url].encode(
+                "utf-8"
+            ), r.url
+    minable = {
+        u
+        for u, lang in zip(pdf["url"], pdf["lang"])
+        if lang in ("en", "fr") and mine_payloads(want[u])
+    }
+    assert len(minable) > 300
+    assert {r.url for r in runs[1]} == minable
 
 
 def test_mine_explode_counts(spark):

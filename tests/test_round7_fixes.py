@@ -125,9 +125,9 @@ def test_arrow_gram_kernel_structure_matches_pandas_kernel():
     it is what makes LSH candidates and exact verify agree."""
     import pyarrow as pa
 
+    from harvester_fgp_spark.functions.tokens import string_buffers
     from harvester_fgp_spark.operators.dedup import (
         _gram_hash_arrays,
-        _string_buffers,
         _word_gram_hashes_arrow,
     )
 
@@ -143,7 +143,7 @@ def test_arrow_gram_kernel_structure_matches_pandas_kernel():
 
     r1, h1 = _gram_hash_arrays(pd.Series(docs))
     col = pa.array(docs, type=pa.string())
-    offs, data = _string_buffers(col)
+    offs, data = string_buffers(col)
     r2, h2 = _word_gram_hashes_arrow(offs, data)
     assert (r1 == r2).all()
 
@@ -169,10 +169,8 @@ def test_arrow_gram_kernel_trailing_empty_docs():
     written one past the slice (was IndexError)."""
     import pyarrow as pa
 
-    from harvester_fgp_spark.operators.dedup import (
-        _string_buffers,
-        _word_gram_hashes_arrow,
-    )
+    from harvester_fgp_spark.functions.tokens import string_buffers
+    from harvester_fgp_spark.operators.dedup import _word_gram_hashes_arrow
 
     for docs in (
         ["hello world foo bar baz", ""],
@@ -181,7 +179,7 @@ def test_arrow_gram_kernel_trailing_empty_docs():
         ["x y z", "", None, ""],
     ):
         col = pa.array(docs, type=pa.string())
-        offs, data = _string_buffers(col)
+        offs, data = string_buffers(col)
         gr, gh = _word_gram_hashes_arrow(offs, data)
         # only the non-empty docs contribute grams
         nonempty = [i for i, d in enumerate(docs) if d]

@@ -111,3 +111,19 @@ def test_ivf_index_persist_query_parity(spark, tmp_path):
 
     parts = [d for d in os.listdir(f"{path}/lists") if d.startswith("cell=")]
     assert len(parts) == 8
+
+
+def test_cosine_topk_drops_null_query_ids(spark):
+    """A query row with a null id has no identity to rank under: it must
+    emit no rows, while the other queries keep their full top-k."""
+    queries = spark.createDataFrame(
+        [(None, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0])],
+        "q_id long, q_emb array<float>",
+    )
+    cands = spark.createDataFrame(
+        [(i, [float(i), 1.0, float(i % 3)]) for i in range(2, 8)],
+        "c_id long, c_emb array<float>",
+    )
+    rows = cosine_topk(queries, cands, k=3, n_blocks=4).collect()
+    assert [r for r in rows if r.q_id is None] == []
+    assert sorted(r["rank"] for r in rows if r.q_id == 1) == [1, 2, 3]

@@ -13,6 +13,8 @@ def test_extract_text_basic():
 def test_extract_text_entities_and_unicode():
     html = "<p>café &amp; crème</p>".encode()
     assert T.extract_text(html) == "café & crème"
+    # decomposed input (e + combining acute) comes out NFC-composed
+    assert T.extract_text("<p>Montre\u0301al</p>".encode()) == "Montr\u00e9al"
 
 
 def test_extract_text_none_and_bad_bytes():
@@ -96,51 +98,30 @@ def test_shingles():
     assert s1 == s2 and len(s1) == 3
 
 
-def test_batch_miner_equals_scalar():
-    """The extractall hot path must match the scalar oracle exactly."""
-    import pandas as pd
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from harvester_fgp_spark.synth import generate_pages
-
-    pdf = generate_pages(2000, seed=42)
-    batch = T.mine_payloads_batch(pdf["text"])
-    for text, got in zip(pdf["text"], batch):
-        assert got == T.mine_payloads(text)
-    # adversarial edge cases incl. the bbox-masking interaction
-    cases = [
-        None, "", "no geo here", "45.5, -75.5",
-        "west: 1 east: 2 south: 3 north: 4, 5.5",   # masked trailing comma
-        "west: 10 east: -10 south: 0 north: 5",       # inverted -> dropped
-        "91.0, 10.0 45.0, 181.0",                     # out of range
-        "west: -80.5 east: -70.2 south: 40.1 north: 50.9 then 49.1, -100.2",
-        "1.5, 2.5 3.5, 4.5 5.5, 6.5",                 # many points
-    ]
-    got = T.mine_payloads_batch(pd.Series(cases))
-    for text, g in zip(cases, got):
-        assert g == T.mine_payloads(text), text
-
-
-def test_batch_miner_property_random_text():
+def _flat_miner_rows(texts):
+    """Run mine_payloads_flat and rebuild per-row payload lists from its
+    flat arrays, checking the per-row ordinal contract on the way."""
     import numpy as np
-    import pandas as pd
 
-    rng = np.random.default_rng(99)
-    frags = ["west:", "east:", "south:", "north:", ",", " ", "-", ".",
-             "12", "45.5", "-75.25", "90", "180.0", "x", "99.9", "0"]
-    texts = [
-        "".join(rng.choice(frags, size=rng.integers(0, 30)))
-        for _ in range(500)
-    ]
-    got = T.mine_payloads_batch(pd.Series(texts))
-    for text, g in zip(texts, got):
-        assert g == T.mine_payloads(text), repr(text)
+    rows, pidx, kind, lat, lon, w, s, e, n = T.mine_payloads_flat(texts)
+    got: dict[int, list] = {}
+
+    def _v(x):
+        return None if np.isnan(x) else float(x)
+
+    for i in range(len(rows)):
+        got.setdefault(int(rows[i]), []).append(
+            {"kind": str(kind[i]), "lat": _v(lat[i]), "lon": _v(lon[i]),
+             "west": _v(w[i]), "south": _v(s[i]), "east": _v(e[i]),
+             "north": _v(n[i])}
+        )
+        assert pidx[i] == len(got[int(rows[i])]) - 1  # ordinal contract
+    return got
 
 
 def test_flat_miner_equals_scalar():
-    """mine_payloads_flat (the fused-stage hot path) == scalar oracle."""
-    import numpy as np
+    """mine_payloads_flat (the fused-stage hot path) == scalar oracle on
+    synth pages and hand-picked edge cases."""
     import pandas as pd
 
     from harvester_fgp_spark.synth import generate_pages
@@ -155,17 +136,25 @@ def test_flat_miner_equals_scalar():
         "WEST: -1.5 EAST: 0.5 SOUTH: -2.25 NORTH: 2.5",  # case-insensitive
     ]
     texts = pd.Series(list(generate_pages(2000, seed=42)["text"]) + cases)
-    rows, pidx, kind, lat, lon, w, s, e, n = T.mine_payloads_flat(texts)
-    # rebuild per-row payload lists from the flat arrays
-    got: dict[int, list] = {}
-    for i in range(len(rows)):
-        def _v(x):
-            return None if np.isnan(x) else float(x)
-        got.setdefault(int(rows[i]), []).append(
-            {"kind": str(kind[i]), "lat": _v(lat[i]), "lon": _v(lon[i]),
-             "west": _v(w[i]), "south": _v(s[i]), "east": _v(e[i]),
-             "north": _v(n[i])}
-        )
-        assert pidx[i] == len(got[int(rows[i])]) - 1  # ordinal contract
+    got = _flat_miner_rows(texts)
     for r, text in enumerate(texts):
         assert got.get(r, []) == T.mine_payloads(text), f"row {r}: {text!r}"
+
+
+def test_batch_miner_property_random_text():
+    """The shipped flat miner == scalar oracle on random fragment soup:
+    bbox keywords, separators and numbers in and out of range, in
+    arbitrary order."""
+    import numpy as np
+    import pandas as pd
+
+    rng = np.random.default_rng(99)
+    frags = ["west:", "east:", "south:", "north:", ",", " ", "-", ".",
+             "12", "45.5", "-75.25", "90", "180.0", "x", "99.9", "0"]
+    texts = [
+        "".join(rng.choice(frags, size=rng.integers(0, 30)))
+        for _ in range(500)
+    ]
+    got = _flat_miner_rows(pd.Series(texts))
+    for r, text in enumerate(texts):
+        assert got.get(r, []) == T.mine_payloads(text), repr(text)
